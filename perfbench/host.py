@@ -35,23 +35,35 @@ def driver_heap_mb() -> int:
 
 def configure_env(root: str, work: str, event_log: str | None) -> None:
     """Session settings fitted to the host, and every scratch path of
-    the driver JVM, its Python workers and Spark inside `work`."""
-    tmp = os.path.join(work, "tmp")
+    the driver JVM, its Python workers and Spark inside `work`.
+
+    The process must run in `root`: the JVM's temp dir and the
+    directory of the Unix sockets between the JVM and Python (guackg
+    turns them on) are given relative to it. A socket path holds at
+    most 107 bytes, which an absolute path under a deep checkout
+    exceeds; relative ones are short wherever the checkout is."""
+    tmp = os.path.relpath(os.path.join(work, "tmp"), root)
+    socks = os.path.relpath(os.path.join(work, "uds"), root)
     local = os.path.join(work, "spark-local")
-    for d in (tmp, local):
+    for d in (tmp, socks, local):
         os.makedirs(d, exist_ok=True)
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (root, os.environ.get("PYTHONPATH")) if p)
-    os.environ["TMPDIR"] = tmp
+    os.environ["TMPDIR"] = os.path.abspath(tmp)
     heap = f"{driver_heap_mb()}m"
-    # no hsperfdata file in /tmp
-    os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
-    # -Xms = heap: the driver heap is sized once instead of growing in
-    # ~500 MB steps whose timing varies run to run (and peak_rss_mb
-    # with it). defaultJavaOptions is prepended to the GC options
+    # no hsperfdata file in /tmp. AlwaysPreTouch with -Xms = heap: the
+    # driver heap is sized and made resident once at JVM start, instead
+    # of growing in ~500 MB steps and faulting in pages as G1 first uses
+    # them, whose timing varies run to run (a 2 GiB heap that a query
+    # round does not fill read 2.1-2.25 GB RSS), and peak_rss_mb with
+    # it. defaultJavaOptions is prepended to the GC options
     # guackg.session sets as extraJavaOptions.
+    os.environ["JAVA_TOOL_OPTIONS"] = (
+        f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -XX:+AlwaysPreTouch")
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        f"--conf spark.driver.defaultJavaOptions=-Xms{heap} pyspark-shell")
+        f"--conf spark.driver.defaultJavaOptions=-Xms{heap} "
+        f"--conf spark.python.unix.domain.socket.dir={socks} "
+        "--conf spark.ui.showConsoleProgress=false pyspark-shell")
     os.environ["SPARK_LOCAL_DIRS"] = local
     os.environ["GUACKG_LOCAL_DIR"] = local
     os.environ["GUACKG_DRIVER_MEM"] = heap
@@ -60,6 +72,7 @@ def configure_env(root: str, work: str, event_log: str | None) -> None:
     os.environ["GUACKG_EDGE_BUCKETS"] = "8"
     os.environ.pop("GUACKG_STAGE_PROBE", None)
     os.environ.pop("GUACKG_SYNC_STAGES", None)
+    os.environ.pop("GUACKG_GRAPH_DRIVER_BOUND", None)
     if event_log:
         os.environ["GUACKG_EVENT_LOG"] = event_log
     else:

@@ -14,7 +14,9 @@ that writes its output. Such a write span is named after the output
 table and attributed to the layer that built the plan (TABLE_LAYER).
 Layers that issue eager jobs of their own (the connected-components
 iterations, the driver linker, clean_corpus) get them through their
-own spans.
+own spans. Each graph query of kg_query runs in a span of its own,
+`graph.<op>.<side>`, opened by the workload around the op and the
+collect of its result.
 """
 
 from __future__ import annotations
@@ -28,6 +30,8 @@ import threading
 import time
 from collections import defaultdict
 from dataclasses import dataclass, field
+
+from perfbench.workloads import ANALYTICS, GRAPH_OPS, SIDES
 
 LAYERS = ("extract", "triples", "link", "cc", "materialize",
           "io.nodes_merge", "io.edges_merge", "ops.clean")
@@ -44,16 +48,20 @@ EXTRA_METRICS = (
     "pipeline.self_s", "pipeline.no_job_s",
     "ops.clean.kept", "ops.clean.exact_dup", "ops.clean.near_dup",
     "setup.session_s", "setup.input_s", "setup.base_kg_s",
-    "setup.warmup_s",
 )
+GRAPH_METRICS = tuple(
+    f"graph.{op}.{side}.{m}" for op in GRAPH_OPS for side in SIDES
+    for m in ("wall_s", "jobs")) + tuple(
+    f"graph.{op}.full.shuffle_write_bytes" for op in ANALYTICS)
 
-# Counters that must repeat exactly between two traced repetitions of
-# the same inputs; the report flags any that do not.
+# Counters that must repeat exactly between two traced runs of the same
+# inputs; the report flags any that do not.
 COUNTERS = tuple(f"{layer}.{m}" for layer in LAYERS
                  for m in ("jobs", "rows_out")) + (
     "io.edges_merge.files_written", "link.vocab_rows", "cc.input_edges",
     "lineage.stages_skipped", "ops.clean.kept", "ops.clean.exact_dup",
-    "ops.clean.near_dup")
+    "ops.clean.near_dup") + tuple(
+    m for m in GRAPH_METRICS if m.endswith(".jobs"))
 
 # output table (directory name under the workdir) -> layer whose plan
 # the write executes
@@ -90,7 +98,7 @@ PY_RECEIVED = "data returned from Python workers"
 def per_layer_names() -> list[str]:
     return ([f"{layer}.{m}" for layer in LAYERS for m in LAYER_METRICS]
             + [f"{layer}.{m}" for layer in UDF_LAYERS for m in UDF_METRICS]
-            + list(EXTRA_METRICS))
+            + list(EXTRA_METRICS) + list(GRAPH_METRICS))
 
 
 @dataclass
@@ -112,6 +120,7 @@ class Rep:
     cc_inputs: list = field(default_factory=list)
     stages_skipped: int = 0
     extra: dict[str, float] = field(default_factory=dict)
+    overhead_s: float = 0.0    # time spent in the tracer's own work
 
 
 class Tracer:
@@ -139,6 +148,7 @@ class Tracer:
 
     @contextlib.contextmanager
     def span(self, name: str, layer: str):
+        t0 = time.perf_counter()
         stack = self._stack()
         parent = stack[-1] if stack else None
         with self._lock:
@@ -148,14 +158,17 @@ class Tracer:
                   time.time())
         stack.append(sp)
         self._tag(sp)
+        own = time.perf_counter() - t0
         try:
             yield sp
         finally:
             sp.end = time.time()
+            t0 = time.perf_counter()
             stack.pop()
             self._tag(parent)
             with self._lock:
                 self.rep.spans.append(sp)
+                self.rep.overhead_s += own + time.perf_counter() - t0
 
     @contextlib.contextmanager
     def untagged(self):
@@ -415,6 +428,16 @@ def layer_metrics(rep: Rep, log: EventLog) -> dict[str, float]:
     for k in EXTRA_METRICS:
         if k not in out:
             out[k] = rep.extra.get(k, 0.0)
+    for op in GRAPH_OPS:
+        for side in SIDES:
+            layer = f"graph.{op}.{side}"
+            out[f"{layer}.wall_s"] = sum(
+                s.end - s.start for s in by_layer.get(layer, []))
+            out[f"{layer}.jobs"] = jobs_by_layer.get(layer, 0)
+    for op in ANALYTICS:
+        out[f"graph.{op}.full.shuffle_write_bytes"] = sum(
+            t["shuffle_write_bytes"]
+            for t in tasks_by_layer.get(f"graph.{op}.full", []))
     return out
 
 
@@ -428,20 +451,34 @@ def format_table(metrics: dict[str, float]) -> str:
             "shuffle_write_bytes", "spill_bytes", "task_skew", "rows_out")
     head = ("layer", "wall_s", "self_s", "cpu_s", "jobs", "shuffle_MB",
             "spill_MB", "skew", "rows_out")
-    lines = ["{:<16}{:>8}{:>8}{:>8}{:>6}{:>11}{:>9}{:>7}{:>10}"
-             .format(*head)]
+    lines = []
     for layer in LAYERS:
         v = [metrics[f"{layer}.{c}"] for c in cols]
         if not v[0] and not v[3]:
             continue      # the workload does not exercise this layer
+        if not lines:
+            lines.append("{:<16}{:>8}{:>8}{:>8}{:>6}{:>11}{:>9}{:>7}{:>10}"
+                         .format(*head))
         lines.append(
             "{:<16}{:>8.2f}{:>8.2f}{:>8.2f}{:>6d}{:>11.2f}{:>9.2f}"
             "{:>7.1f}{:>10d}".format(
                 layer, v[0], v[1], v[2], int(v[3]), v[4] / 2**20,
                 v[5] / 2**20, v[6], int(v[7])))
+    graph = [op for op in GRAPH_OPS
+             if any(metrics[f"graph.{op}.{side}.jobs"] for side in SIDES)]
+    if graph:
+        lines.append("{:<16}".format("graph op") + "".join(
+            f"{side + ' s':>10}{'jobs':>6}" for side in SIDES))
+        for op in graph:
+            lines.append("{:<16}".format(op) + "".join(
+                "{:>10.3f}{:>6d}".format(
+                    metrics[f"graph.{op}.{side}.wall_s"],
+                    int(metrics[f"graph.{op}.{side}.jobs"]))
+                for side in SIDES))
     rest = [k for k in per_layer_names()
-            if not any(k == f"{layer}.{c}" for layer in LAYERS
-                       for c in cols)]
+            if not k.startswith("graph.")
+            and not any(k == f"{layer}.{c}" for layer in LAYERS
+                        for c in cols)]
     lines.append("  ".join(f"{k}={metrics[k]:.4g}" for k in rest
                            if metrics.get(k)))
     return "\n".join(lines)

@@ -25,16 +25,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from guackg.local import collect_bounded, local_frame
+
 MAX_ITERATIONS = 25
 
-# Below these bounds the equivalence graph is collected and solved
-# with driver-side union-find — the same adaptive small-side rule as a
-# broadcast join (Spark's autoBroadcastJoinThreshold): a graph that
-# fits on the driver costs one collect instead of O(log n) shuffle
-# iterations. The star iterations remain the large-graph path. The
-# BYTES bound is the binding one (1M edges of long URL keys is
-# hundreds of MB once in a Python dict); 128 MB of raw key bytes
-# ≈ ≲1 GB resident driver-side — safe inside an 8 GB driver.
+# Below these bounds the equivalence graph is solved with driver-side
+# union-find — the same adaptive small-side rule as a broadcast join
+# (Spark's autoBroadcastJoinThreshold): the distinct edge list is
+# checked against the bounds and pulled in one bounded Arrow collect
+# (local.collect_bounded), and the components leave as a LocalRelation
+# (local.local_frame), instead of O(log n) shuffle iterations. The
+# star iterations remain the large-graph path. The BYTES bound
+# (key-length sum) is the binding one (1M edges of long URL keys is
+# hundreds of MB once in a Python dict); the check enforces it before
+# anything reaches the driver, and 128 MB of raw key bytes ≈ ≲1 GB
+# resident driver-side — safe inside an 8 GB driver.
 DRIVER_CC_MAX_EDGES = 1_000_000
 DRIVER_CC_MAX_BYTES = 128 * 1024 * 1024
 
@@ -69,24 +74,21 @@ def _small_star(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _checksum(edges: DataFrame) -> tuple[int, int, int]:
-    """(edge count, content hash, total key bytes) in ONE 1-row agg —
-    the bytes feed the driver-path decision, so sizing costs no extra
-    job."""
+def _checksum(edges: DataFrame) -> tuple[int, int]:
+    """(edge count, content hash) in ONE 1-row agg: the convergence
+    signal of the star iterations."""
     row = edges.select(
         F.count("*").alias("n"),
         F.coalesce(F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
                    F.lit(0).cast("decimal(38,0)")).alias("h"),
-        F.coalesce(F.sum(F.length("u") + F.length("v")), F.lit(0))
-        .alias("b"),
     ).collect()[0]
-    return int(row["n"]), int(row["h"]), int(row["b"])
+    return int(row["n"]), int(row["h"])
 
 
-def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Small-graph path: collect edges, union-find on the driver,
-    min-string representative — bit-identical output to the star
-    iterations."""
+def _driver_union_find(spark, pairs) -> DataFrame:
+    """Small-graph path: union-find on the driver over the Arrow table
+    of collected (u, v) pairs, min-string representative —
+    bit-identical output to the star iterations."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -97,20 +99,15 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    # one collect job, NOT toLocalIterator: the latter runs a separate
-    # sequential job per partition — pure per-job dispatch overhead
-    # that grows with executor count (measured: the canonicalize stage
-    # got SLOWER 2.7→5.0 s going 1→4 executor JVMs). The byte bound
-    # checked by the caller guarantees the collect fits on the driver.
-    for row in edges.collect():
-        ra, rb = find(row[0]), find(row[1])
+    for a, b in zip(pairs.column(0).to_pylist(),
+                    pairs.column(1).to_pylist()):
+        ra, rb = find(a), find(b)
         if ra != rb:
             # min-string wins ⇒ canon == lexicographic component min
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     rows = [(k, find(k)) for k in parent]
-    return edges.sparkSession.createDataFrame(
-        rows, "member_key string, canon_key string")
+    return local_frame(spark, rows, "member_key string, canon_key string")
 
 
 def connected_components(
@@ -126,12 +123,13 @@ def connected_components(
              .select(F.col(key_a).alias("u"), F.col(key_b).alias("v"))
              .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
              .filter(F.col("u") != F.col("v"))
-             .distinct()
-             .localCheckpoint())
+             .distinct())
 
+    pairs, edges = collect_bounded(edges, driver_max_edges,
+                                   DRIVER_CC_MAX_BYTES, checkpoint=True)
+    if pairs is not None:
+        return _driver_union_find(edges.sparkSession, pairs)
     prev = _checksum(edges)
-    if prev[0] <= driver_max_edges and prev[2] <= DRIVER_CC_MAX_BYTES:
-        return _driver_union_find(edges)
     for _ in range(MAX_ITERATIONS):
         edges = _small_star(_large_star(edges)).localCheckpoint()
         cur = _checksum(edges)

@@ -20,21 +20,27 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Below these bounds the (pred-filtered, distinct) edge list is
-# collected and the BFS runs driver-side — the same adaptive
-# small-side rule as cc.py's union-find fast path: an interactive
-# query over a graph that fits on the driver costs ONE collect
-# instead of 3-4 Spark jobs per frontier round (measured: the
-# query-CLI BFS modes spend ~10 s in round barriers on graphs whose
-# edge list is a few MB). Every tie-break in the distributed loops is
-# a deterministic lexicographic MIN, so the driver replay is
-# value-identical — asserted by parity tests; the iterative
-# DataFrame loops remain the at-scale path (and the only path once
-# the bounds trip). GUACKG_GRAPH_DRIVER_BOUND=0 disables (tests use
-# it to pin the distributed path). Keys are ASCII by construction
-# (normalized slugs / page:sha256 / ent: namespaces), so Python's
-# per-codepoint string order agrees with Spark's UTF8-binary order
-# on every comparison the replay makes.
+from guackg.local import collect_bounded, local_frame
+
+# Driver fast paths. Below these bounds a traversal or analytics op
+# answers on the driver instead of running its Spark loop (the
+# in-memory walk of guac's inmem/path.go): the pred-filtered, distinct
+# edge frame is checked against the bound (at most
+# GRAPH_DRIVER_MAX_EDGES rows and a key-length sum of at most 64 MB)
+# and pulled in one bounded Arrow collect (local.collect_bounded), and
+# the answer leaves as a LocalRelation (local.local_frame): a small
+# graph costs the jobs of that one collect, and collecting the answer
+# costs none. Nothing over the bound reaches the driver; over it, the
+# distributed branch gets the edge frame back persisted and
+# materialized, and unpersists it when done. Every tie-break in the
+# distributed loops is a deterministic lexicographic MIN, so the
+# driver replay is value-identical (asserted by parity tests); the
+# iterative DataFrame loops remain the at-scale path and the only path
+# once the bounds trip. GUACKG_GRAPH_DRIVER_BOUND=0 disables the driver
+# path (tests use it to pin the distributed loops). Keys are ASCII by
+# construction (normalized slugs / page:sha256 / ent: namespaces), so
+# Python's per-codepoint string order agrees with Spark's UTF8-binary
+# order on every comparison the replay makes.
 GRAPH_DRIVER_MAX_EDGES = 1_000_000
 
 
@@ -43,21 +49,17 @@ def _graph_driver_max_bytes() -> int:
                               str(64 * 1024 * 1024)))
 
 
-def _driver_edge_list(e: DataFrame, cols: list[str]):
-    """Collect the prepared edge frame when it fits the driver bounds;
-    None → caller stays distributed. One 1-row agg sizes it (the frame
-    arrives persisted, so sizing costs no recompute)."""
-    max_bytes = _graph_driver_max_bytes()
-    if max_bytes <= 0:
-        return None
-    size = e.select(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(sum((F.length(c) for c in cols[1:]),
-                             F.length(cols[0]))), F.lit(0)).alias("b"),
-    ).collect()[0]
-    if size["n"] > GRAPH_DRIVER_MAX_EDGES or size["b"] > max_bytes:
-        return None
-    return e.collect()
+def _driver_edge_list(e: DataFrame, off: bool = False
+                      ) -> tuple[list[tuple] | None, DataFrame]:
+    """(rows, frame): the prepared edge frame's rows as tuples when it
+    fits the driver bounds (and `off` is not set), else None, and the
+    frame to run the distributed path on, which the caller unpersists
+    when done (see local.collect_bounded)."""
+    t, e = collect_bounded(e, GRAPH_DRIVER_MAX_EDGES,
+                           0 if off else _graph_driver_max_bytes())
+    if t is None:
+        return None, e
+    return list(zip(*(c.to_pylist() for c in t.columns))), e
 
 
 def _require_constraint_col(edges: DataFrame, constraint_col: str) -> None:
@@ -75,19 +77,15 @@ def _require_constraint_col(edges: DataFrame, constraint_col: str) -> None:
 
 def _driver_key_set(df: DataFrame | None) -> set[str] | None:
     """Bounded collect of a 1-column key frame (skip sets). None when
-    the frame is absent OR too big for the driver (callers then stay
-    distributed end-to-end; a huge skip set with a tiny edge set is
-    not a case worth a mixed plan)."""
+    the frame is too big for the driver (callers then stay distributed
+    end-to-end; a huge skip set with a tiny edge set is not a case
+    worth a mixed plan)."""
     if df is None:
         return set()
-    col = df.columns[0]
-    size = df.select(F.count("*").alias("n"),
-                     F.coalesce(F.sum(F.length(col)), F.lit(0))
-                     .alias("b")).collect()[0]
-    if size["n"] > GRAPH_DRIVER_MAX_EDGES or \
-            size["b"] > _graph_driver_max_bytes():
-        return None
-    return {r[0] for r in df.collect()}
+    t, frame = collect_bounded(df, GRAPH_DRIVER_MAX_EDGES,
+                               _graph_driver_max_bytes())
+    frame.unpersist()
+    return None if t is None else set(t.column(0).to_pylist())
 
 
 def neighbors(edges: DataFrame, key: str,
@@ -147,21 +145,17 @@ def reachable_from(edges: DataFrame, start_keys: list[str],
                      "pred")
     if preds:
         e = e.filter(F.col("pred").isin(preds))
-    e = e.select("src", "dst").distinct().persist()
-    e.count()
+    e = e.select("src", "dst").distinct()
     skip = None
     if skip_keys is not None:
         skip = skip_keys.select(
             F.col(skip_keys.columns[0]).alias("key")).distinct()
 
-    # skip set sized FIRST (the cheaper bound): when it alone busts the
-    # driver budget, the edge list is never collected at all
-    skipset = _driver_key_set(skip) if _graph_driver_max_bytes() > 0 \
-        else None
-    pairs = _driver_edge_list(e, ["src", "dst"]) \
-        if skipset is not None else None
+    # skip set collected FIRST (the cheaper bound): when it alone busts
+    # the driver budget, the edge list is never collected at all
+    skipset = _driver_key_set(skip)
+    pairs, e = _driver_edge_list(e, off=skipset is None)
     if pairs is not None:
-        e.unpersist()
         adj: dict[str, list[str]] = {}
         for r in pairs:
             adj.setdefault(r[0], []).append(r[1])
@@ -180,11 +174,10 @@ def reachable_from(edges: DataFrame, start_keys: list[str],
             rows.extend((k, depth) for k in sorted(nxt))
             seen |= nxt
             frontier_keys = nxt
-        return spark.createDataFrame(rows,
-                                     "key string, depth int")
+        return local_frame(spark, rows, "key string, depth int")
 
-    visited = spark.createDataFrame([(k, 0) for k in start_keys],
-                                    "key string, depth int")
+    visited = local_frame(spark, [(k, 0) for k in start_keys],
+                          "key string, depth int")
     frontier = visited
     for depth in range(1, max_depth + 1):
         nxt = (frontier.join(e, frontier.key == e.src)
@@ -200,6 +193,9 @@ def reachable_from(edges: DataFrame, start_keys: list[str],
         frontier = nxt
     e.unpersist()
     return visited
+
+
+BLAST_RADIUS_DDL = "key string, depth int, parent string, via_pred string"
 
 
 def blast_radius(edges: DataFrame, start_keys: list[str],
@@ -241,20 +237,16 @@ def blast_radius(edges: DataFrame, start_keys: list[str],
                      F.col("obj_key").alias("dst"), "pred")
     if preds:
         e = e.filter(F.col("pred").isin(preds))
-    e = e.distinct().persist()
-    e.count()
+    e = e.distinct()
     skip = None
     if skip_keys is not None:
         skip = skip_keys.select(
             F.col(skip_keys.columns[0]).alias("key")).distinct()
 
-    # skip set sized first — see reachable_from
-    skipset = _driver_key_set(skip) if _graph_driver_max_bytes() > 0 \
-        else None
-    pairs = _driver_edge_list(e, ["src", "dst", "pred"]) \
-        if skipset is not None else None
+    # skip set collected first — see reachable_from
+    skipset = _driver_key_set(skip)
+    pairs, e = _driver_edge_list(e, off=skipset is None)
     if pairs is not None:
-        e.unpersist()
         adj: dict[str, list[tuple[str, str]]] = {}
         for r in pairs:
             adj.setdefault(r[0], []).append((r[1], r[2]))
@@ -280,13 +272,10 @@ def blast_radius(edges: DataFrame, start_keys: list[str],
                         for k, (p, vp) in sorted(best.items()))
             seen |= best.keys()
             frontier_keys = set(best)
-        return spark.createDataFrame(
-            rows, "key string, depth int, parent string, "
-                  "via_pred string")
+        return local_frame(spark, rows, BLAST_RADIUS_DDL)
 
-    visited = spark.createDataFrame(
-        [(k, 0, None, None) for k in start_keys],
-        "key string, depth int, parent string, via_pred string")
+    visited = local_frame(spark, [(k, 0, None, None) for k in start_keys],
+                          BLAST_RADIUS_DDL)
     frontier = visited.select("key")
     w = Window.partitionBy("key").orderBy("parent", "via_pred")
     for depth in range(1, max_depth + 1):
@@ -362,13 +351,11 @@ def bfs_path(edges: DataFrame, src_key: str, dst_key: str,
                        F.col("subj_key").alias("dst"))
     e = {"out": fwd, "in": rev,
          "both": fwd.unionByName(rev)}[direction]
-    e = e.distinct().persist()
-    e.count()
+    e = e.distinct()
     spark = edges.sparkSession
 
-    pairs = _driver_edge_list(e, ["src", "dst"])
+    pairs, e = _driver_edge_list(e)
     if pairs is not None:
-        e.unpersist()
         adj: dict[str, list[str]] = {}
         for r in pairs:
             adj.setdefault(r[0], []).append(r[1])
@@ -401,8 +388,8 @@ def bfs_path(edges: DataFrame, src_key: str, dst_key: str,
             cur = parent.get(cur)
         return list(reversed(path))
 
-    visited = spark.createDataFrame([(src_key, None)],
-                                    "key string, parent string")
+    visited = local_frame(spark, [(src_key, None)],
+                          "key string, parent string")
     frontier = visited
     found = src_key == dst_key
     for _ in range(max_depth):
@@ -460,8 +447,8 @@ def bfs_path_edges(edges: DataFrame, src_key: str, dst_key: str,
     if path is None:
         return None
     spark = edges.sparkSession
-    hops = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(zip(path, path[1:]))],
+    hops = local_frame(
+        spark, [(i, a, b) for i, (a, b) in enumerate(zip(path, path[1:]))],
         "step int, subj_key string, obj_key string")
     prop_cols = ["pred", "n_evidence", "first_seen", "last_seen",
                  "match_level"]
@@ -505,43 +492,43 @@ def toposort_levels(edges: DataFrame) -> DataFrame:
     Nodes still unassigned when a round strips nothing are cyclic
     (toposort.go:26-61 cycle detection)."""
     e = edges.select(F.col("subj_key").alias("src"),
-                     F.col("obj_key").alias("dst")).distinct().persist()
-    e.count()
+                     F.col("obj_key").alias("dst")).distinct()
     spark = edges.sparkSession
 
-    pairs = _driver_edge_list(e, ["src", "dst"])
+    pairs, e = _driver_edge_list(e)
     if pairs is not None:
-        e.unpersist()
-        # Kahn replay, value-identical to the loop below: per round,
-        # the remaining nodes with no incoming edge among the
-        # remaining edges take the level; a rootless round marks the
-        # rest (a cycle) with -1
-        remaining = {r[0] for r in pairs} | {r[1] for r in pairs}
+        # Kahn's algorithm with a frontier queue, value-identical to
+        # the loop below: a level is the nodes whose last incoming edge
+        # was stripped with the previous level (sorted within the
+        # level); nodes never reaching in-degree 0 sit on or behind a
+        # cycle and take level -1. O(n + m).
         out_adj: dict[str, list[str]] = {}
-        indeg = {k: 0 for k in remaining}
+        indeg: dict[str, int] = {}
         for s, d in pairs:
             out_adj.setdefault(s, []).append(d)
-            indeg[d] += 1
+            indeg.setdefault(s, 0)
+            indeg[d] = indeg.get(d, 0) + 1
+        frontier = sorted(k for k, n in indeg.items() if n == 0)
         rows, level = [], 0
-        while remaining:
-            roots = [k for k in remaining if indeg[k] == 0]
-            if not roots:
-                rows.extend((k, -1) for k in sorted(remaining))
-                break
-            rows.extend((k, level) for k in sorted(roots))
-            remaining -= set(roots)
-            for s in roots:
+        while frontier:
+            rows.extend((k, level) for k in frontier)
+            nxt = []
+            for s in frontier:
                 for d in out_adj.get(s, ()):
-                    if d in remaining:
-                        indeg[d] -= 1
+                    indeg[d] -= 1
+                    if indeg[d] == 0:
+                        nxt.append(d)
+            frontier = sorted(nxt)
             level += 1
-        return spark.createDataFrame(rows, "key string, level int")
+        rows.extend((k, -1) for k in sorted(k for k, n in indeg.items()
+                                            if n > 0))
+        return local_frame(spark, rows, "key string, level int")
 
     nodes = e.select(F.col("src").alias("key")).union(
         e.select(F.col("dst").alias("key"))).distinct()
     remaining_edges = e
     remaining_nodes = nodes.localCheckpoint()
-    out = spark.createDataFrame([], "key string, level int")
+    out = local_frame(spark, [], "key string, level int")
     level = 0
     while not remaining_nodes.isEmpty():
         with_incoming = remaining_edges.select(
@@ -744,6 +731,53 @@ def triangle_count(edges: DataFrame, subj_col: str = "subj_key",
                     .alias("triangles")))
 
 
+def _peel_coreness(pairs: list[tuple[str, str]]) -> tuple[list[str],
+                                                           list[int]]:
+    """Coreness of every node of the simple undirected graph `pairs`
+    (no self-loops, no duplicate pairs) by bucket-queue peeling
+    (Batagelj & Zaversnik 2003, public algorithm), O(n + m): nodes sit
+    in an array sorted by current degree, `start[d]` indexes the first
+    node of degree d, and removing the lowest-degree node moves each
+    higher-degree neighbor one bucket down with a swap. Returns the
+    sorted keys and their coreness in the same order (coreness does
+    not depend on peel order)."""
+    keys = sorted({k for p in pairs for k in p})
+    idx = {k: i for i, k in enumerate(keys)}
+    nbrs: list[list[int]] = [[] for _ in keys]
+    for u, v in pairs:
+        nbrs[idx[u]].append(idx[v])
+        nbrs[idx[v]].append(idx[u])
+    deg = [len(ns) for ns in nbrs]
+    # counting sort of the nodes by degree
+    start = [0] * (max(deg, default=0) + 2)
+    for d in deg:
+        start[d + 1] += 1
+    for d in range(1, len(start)):
+        start[d] += start[d - 1]
+    fill = start[:]
+    pos = [0] * len(keys)
+    order = [0] * len(keys)
+    for v, d in enumerate(deg):
+        pos[v] = fill[d]
+        order[pos[v]] = v
+        fill[d] += 1
+    for i in range(len(keys)):
+        v = order[i]
+        for u in nbrs[v]:
+            du = deg[u]
+            if du > deg[v]:
+                # swap u with the first node of its bucket, then shrink
+                # the bucket from the front: u now has degree du - 1
+                w = order[start[du]]
+                if u != w:
+                    pu, pw = pos[u], start[du]
+                    order[pu], order[pw] = w, u
+                    pos[u], pos[w] = pw, pu
+                start[du] += 1
+                deg[u] = du - 1
+    return keys, deg
+
+
 def k_core(edges: DataFrame, subj_col: str = "subj_key",
            obj_col: str = "obj_key",
            max_iterations: int | None = None) -> DataFrame:
@@ -795,35 +829,18 @@ def k_core(edges: DataFrame, subj_col: str = "subj_key",
            .filter(F.col("u") != F.col("v")))
     und = (sym.select(F.least("u", "v").alias("u"),
                       F.greatest("u", "v").alias("v"))
-           .distinct().persist())
-    # bounded driver fast path (the repo's standard adaptive rule,
-    # GRAPH_DRIVER_MAX_EDGES/_BYTES; GUACKG_GRAPH_DRIVER_BOUND=0
-    # pins the distributed fixpoint): below the bounds the exact
-    # sequential peeling runs driver-side — value-identical because
-    # the h-index fixpoint EQUALS the peeling coreness (the Lü et
-    # al. theorem), asserted by the mode-parity tests
-    pairs = _driver_edge_list(und, ["u", "v"])
+           .distinct())
+    # bounded driver fast path (GRAPH_DRIVER_MAX_EDGES and the byte
+    # bound; GUACKG_GRAPH_DRIVER_BOUND=0 pins the distributed
+    # fixpoint): below the bounds the exact sequential peeling runs
+    # driver-side — value-identical because the h-index fixpoint
+    # EQUALS the peeling coreness (the Lü et al. theorem), asserted by
+    # the mode-parity tests
+    pairs, und = _driver_edge_list(und)
     if pairs is not None:
-        und.unpersist()
-        spark = edges.sparkSession
-        adj_d: dict[str, set] = {}
-        for r in pairs:
-            adj_d.setdefault(r[0], set()).add(r[1])
-            adj_d.setdefault(r[1], set()).add(r[0])
-        core: dict[str, int] = {}
-        deg = {k: len(ns) for k, ns in adj_d.items()}
-        k = 0
-        while deg:
-            m = min(deg.values())
-            k = max(k, m)
-            victim = min(x for x, d in deg.items() if d == m)
-            core[victim] = k
-            for nb in adj_d[victim]:
-                if nb in deg:
-                    deg[nb] -= 1
-            del deg[victim]
-        return spark.createDataFrame(
-            sorted(core.items()), "key string, core int")
+        keys, core = _peel_coreness(pairs)
+        return local_frame(edges.sparkSession, list(zip(keys, core)),
+                           "key string, core int")
     # pre-partition the adjacency by the per-round join key ONCE:
     # localCheckpoint preserves the hash partitioning, so every
     # round's join shuffles only the O(nodes) value frame — the

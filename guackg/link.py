@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from guackg.local import collect_bounded, local_frame
+
 N_MINHASH = 32
 N_BANDS = 16          # r = 2 rows/band: P(cand | J=.6) ≈ .999
 SHINGLE_K = 3
@@ -244,16 +246,18 @@ def link_mentions(
     return links, equivalence_edges_from_links(links)
 
 
-# Below these bounds the vocabulary and dictionary are collected and
-# linked on the driver — the same adaptive small-side rule as cc.py's
-# driver union-find and Spark's own broadcast threshold: a vocabulary
-# that fits in one pandas frame costs one collect + an inverted-index
-# scan instead of ~10 tiny distributed stages whose barriers dominate
-# (measured: the distributed link stage spends ~6-8 s on a 2.3k-norm
-# vocabulary, nearly all of it scheduling/broadcast floors). The
-# distributed LSH path above remains the scale path: mention
-# vocabularies grow with the corpus and blow these bounds long before
-# 10^12 documents.
+# Below these bounds the vocabulary and dictionary are linked on the
+# driver — the same adaptive small-side rule as cc.py's driver
+# union-find and Spark's own broadcast threshold. Each input is checked
+# against its bound and pulled in one bounded Arrow collect
+# (local.collect_bounded, whose check replaces a separate size probe)
+# and the links leave as a LocalRelation
+# (local.local_frame), instead of ~10 tiny distributed stages whose
+# barriers dominate (measured: the distributed link stage spends
+# ~6-8 s on a 2.3k-norm vocabulary, nearly all of it
+# scheduling/broadcast floors). The distributed LSH path above remains
+# the scale path: mention vocabularies grow with the corpus and blow
+# these bounds long before 10^12 documents.
 DRIVER_LINK_MAX_VOCAB = 50_000
 DRIVER_LINK_MAX_DICT = 50_000
 
@@ -261,7 +265,7 @@ DRIVER_LINK_MAX_DICT = 50_000
 def link_mentions_driver(
     mentions: DataFrame,
     alias_dict: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame] | None:
     """Driver-side small-vocabulary linker. Same contract as
     `link_mentions` — (norm) × (surface, canonical_key) → links with
     method ∈ {dict, lsh, fallback} — with IDENTICAL normalization,
@@ -270,24 +274,34 @@ def link_mentions_driver(
     EXACT Jaccard over an inverted shingle index, so its recall is ≥
     the banded path's (banding can only miss candidate pairs; fuzzy
     rows keep the method label 'lsh' because downstream match-rank
-    semantics key on the tier, not the algorithm). Caller guarantees
-    both inputs fit the DRIVER_LINK_MAX_* bounds."""
+    semantics key on the tier, not the algorithm). Returns None, having
+    linked nothing, when either input is over its DRIVER_LINK_MAX_*
+    bound: the caller then runs `link_mentions`."""
     from collections import defaultdict
 
     spark = mentions.sparkSession
-    m = [r["norm"] for r in mentions.select("norm").collect()]
-    d_rows = alias_dict.select(F.col("surface").alias("dnorm"),
-                               "canonical_key").collect()
+    m_t, frame = collect_bounded(mentions.select("norm"),
+                                 DRIVER_LINK_MAX_VOCAB)
+    frame.unpersist()
+    d_t = None
+    if m_t is not None:
+        d_t, frame = collect_bounded(
+            alias_dict.select("surface", "canonical_key"),
+            DRIVER_LINK_MAX_DICT)
+        frame.unpersist()
+    if d_t is None:
+        return None
+    m = m_t.column("norm").to_pylist()
     # same duplicate-surface rule as dedupe_alias_dict (real identity
     # over ent:guac/, then lexicographic min) — NOT collect() row
     # order, which varies with partition layout across runs
     dict_map: dict[str, str] = {}
-    for r in d_rows:
-        k = r["canonical_key"]
-        cur = dict_map.get(r["dnorm"])
+    for dnorm, k in zip(d_t.column("surface").to_pylist(),
+                        d_t.column("canonical_key").to_pylist()):
+        cur = dict_map.get(dnorm)
         if cur is None or (k.startswith("ent:guac/"), k) < \
                 (cur.startswith("ent:guac/"), cur):
-            dict_map[r["dnorm"]] = k
+            dict_map[dnorm] = k
 
     def shingles(s: str) -> set:
         p = "^" + s + "$"
@@ -321,8 +335,8 @@ def link_mentions_driver(
             rows.append((norm, dict_map[dnorms[best_i]], "lsh"))
         else:
             rows.append((norm, "ent:guac/" + norm, "fallback"))
-    links = spark.createDataFrame(
-        rows, "norm string, canonical_key string, method string")
+    links = local_frame(
+        spark, rows, "norm string, canonical_key string, method string")
     return links, equivalence_edges_from_links(links)
 
 

@@ -23,10 +23,10 @@ from guackg import io as gio
 from guackg.cc import connected_components
 from guackg.extract import extract, valid_col
 from guackg.lineage import Lineage
-from guackg.link import (DRIVER_LINK_MAX_DICT, DRIVER_LINK_MAX_VOCAB,
-                         advisory_edges, equivalence_edges_from_links,
-                         identifier_candidates, link_mentions,
-                         link_mentions_driver, mention_frequencies)
+from guackg.link import (DRIVER_LINK_MAX_VOCAB, advisory_edges,
+                         equivalence_edges_from_links, identifier_candidates,
+                         link_mentions, link_mentions_driver,
+                         mention_frequencies)
 from guackg.materialize import (build_edges, build_nodes,
                                 page_map_fits_broadcast,
                                 page_mention_edges, page_node_rows,
@@ -261,18 +261,17 @@ class KGPipeline:
                 mentions = out["mention_freq"].select("norm")
                 # adaptive small-side rule (cc.py's union-find analog):
                 # the EXACT vocabulary size is already in the
-                # mention_freq lineage record, so a bench-scale
-                # vocabulary links on the driver (exact Jaccard,
-                # identical contract) instead of paying ~10 tiny-stage
-                # barriers; a web-scale vocabulary blows the bound and
-                # takes the distributed LSH path.
+                # mention_freq lineage record, so a web-scale
+                # vocabulary goes straight to the distributed LSH path;
+                # otherwise the driver linker's bounded collects size
+                # the inputs and a bench-scale vocabulary links on the
+                # driver (exact Jaccard, identical contract) instead of
+                # paying ~10 tiny-stage barriers.
                 rec = self.lineage.read("mention_freq")
-                small = bool(rec) and \
-                    rec["total_rows"] <= DRIVER_LINK_MAX_VOCAB and \
-                    alias_dict.limit(DRIVER_LINK_MAX_DICT + 1).count() \
-                    <= DRIVER_LINK_MAX_DICT
-                linker = link_mentions_driver if small else link_mentions
-                links, _ = linker(mentions, alias_dict)
+                res = None
+                if rec and rec["total_rows"] <= DRIVER_LINK_MAX_VOCAB:
+                    res = link_mentions_driver(mentions, alias_dict)
+                links, _ = res or link_mentions(mentions, alias_dict)
                 return links
             out["links"] = self._run_stage(
                 "link", _fingerprint(fp_base, "link", dict_fp), _link)

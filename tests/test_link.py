@@ -147,3 +147,20 @@ def test_duplicate_dict_surfaces_resolve_deterministically(spark):
         # must not fabricate an entity merge
         eq = equiv.collect()
         assert len([e for e in eq if e.key_a == "sfc:ada lovelace"]) == 1
+
+
+def test_driver_linker_declines_over_bound_inputs(spark, monkeypatch):
+    """The driver linker's bounded collects are its size probe: an input
+    over its bound yields None (the caller then runs link_mentions),
+    never a partial link table."""
+    import guackg.link as link
+    dict_df = spark.createDataFrame(
+        [("ada lovelace", "ent:person/ada"), ("acme corp", "ent:org/acme")],
+        "surface string, canonical_key string")
+    mentions = spark.createDataFrame([("ada lovelace",)], "norm string")
+    assert link.link_mentions_driver(mentions, dict_df) is not None
+    monkeypatch.setattr(link, "DRIVER_LINK_MAX_DICT", 1)
+    assert link.link_mentions_driver(mentions, dict_df) is None
+    monkeypatch.setattr(link, "DRIVER_LINK_MAX_DICT", 2)
+    monkeypatch.setattr(link, "DRIVER_LINK_MAX_VOCAB", 0)
+    assert link.link_mentions_driver(mentions, dict_df) is None

@@ -14,6 +14,8 @@ directory with the SAME observable semantics:
   (MERGE INTO … WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT). On
   Iceberg this is a single `MERGE INTO` statement; the helper keeps
   call sites engine-agnostic.
+- `append_table`  — all-or-nothing append of a batch (the MinHash
+  near-dup state store's ingest write).
 - `read_table`    — plain scan; column pruning / predicate pushdown
   flow into the parquet reader via Catalyst.
 
@@ -60,15 +62,16 @@ def _heal_table(path: str, sweep_tmp: bool = False) -> None:
     but not compactions lost rows permanently: a post-compaction-crash
     read_table silently missed the moved-aside leaf, and a downstream
     overwrite deleted its only copy). Heals, in dependency order:
-    whole-table swaps, leaf merge-swaps, and root-level interrupted
-    compactions. Cost when nothing is pending: one parent-dir glob +
-    two root listdirs. `sweep_tmp` additionally removes dead
-    `.__tmp__*` siblings from prior writer crashes — writers only
-    (single-writer-per-table contract; a reader must never delete a
-    concurrent writer's live tmp)."""
+    whole-table swaps, leaf merge-swaps, committed appends, and
+    root-level interrupted compactions. Cost when nothing is pending:
+    two parent-dir globs + two root listdirs. `sweep_tmp` additionally
+    removes dead `.__tmp__*` siblings from prior writer crashes —
+    writers only (single-writer-per-table contract; a reader must never
+    delete a concurrent writer's live tmp)."""
     _recover_swap(path)
     _recover_merge_swap(path)
     if os.path.isdir(path):
+        _recover_append(path)
         _recover_compaction(path, deep=False)
     if sweep_tmp:
         for stale in glob.glob(glob.escape(path) + ".__tmp__*"):
@@ -174,6 +177,50 @@ def write_table(df: DataFrame, path: str,
     w.parquet(tmp)
     _await_gate(tmp, path, commit_gate, commit_abort)
     _swap_in(tmp, path)
+
+
+def append_table(df: DataFrame, path: str) -> None:
+    """Append `df`'s rows to the parquet table at `path`, all or
+    nothing. The first batch is a `write_table`. A later batch is
+    written to a private `.__tmp__` sibling, so a failed job leaves
+    only that sibling, which the next writer sweeps (a bare
+    `mode("append")` under the v2 committer leaves the failed job's
+    committed task files in the table). The written sibling is then
+    renamed to `.__append__<id>`, the commit point, and its data files
+    are moved into the table. If a crash interrupts the moves, the
+    next read_table or writer finishes them (`_recover_append`): the
+    batch was complete before the first move, and Spark's per-job
+    file names never collide."""
+    _heal_table(path, sweep_tmp=True)
+    if not table_exists(path):
+        write_table(df, path)
+        return
+    tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
+    df.write.parquet(tmp)
+    pending = (f"{path}.__append__{time.time_ns():020d}"
+               f"{uuid.uuid4().hex[:4]}")
+    os.replace(tmp, pending)
+    _finish_append(pending, path)
+
+
+def _finish_append(pending: str, path: str) -> None:
+    for name in sorted(os.listdir(pending)):
+        if name.startswith(("_", "._")):  # _SUCCESS and its checksum
+            continue
+        src = os.path.join(pending, name)
+        try:
+            os.replace(src, os.path.join(path, name))
+        except FileNotFoundError:
+            if os.path.exists(src):  # not moved by a concurrent heal
+                raise
+    shutil.rmtree(pending, ignore_errors=True)
+
+
+def _recover_append(path: str) -> None:
+    """Finish appends that committed (renamed to `.__append__`) but
+    died before all their files moved into the table."""
+    for pending in sorted(glob.glob(glob.escape(path) + ".__append__*")):
+        _finish_append(pending, path)
 
 
 def _await_gate(tmp: str, path: str, commit_gate, commit_abort) -> None:

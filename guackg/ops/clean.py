@@ -132,16 +132,16 @@ def clean_corpus(docs: DataFrame, text_col: str = "text",
                            how="left_anti")
     # exact winners: smallest doc_id per content hash; every other
     # member of the hash group exits at 'exact_dup'
-    ex_keep = exact_dedup(gated, text_col).select("doc_id") \
-        .withColumn("_ex", F.lit(1))
-
-    survivors = gated.join(ex_keep.select("doc_id"), on="doc_id") \
-        .persist()
+    ex_keep = exact_dedup(gated, text_col).select("doc_id")
+    survivors = gated.join(ex_keep, on="doc_id").persist()
     pairs = minhash_lsh_pairs(survivors, text_col,
                               threshold=near_threshold)
     collapse = near_dup_collapse(survivors, pairs)  # doc_id, cluster_id, keep
 
-    out = base.join(ex_keep, on="doc_id", how="left")
+    # the audit's exact-dup mark reads the persisted survivors (the
+    # same ids: ex_keep ⊆ gated), so exact_dedup's window runs once
+    out = base.join(survivors.select("doc_id").withColumn("_ex", F.lit(1)),
+                    on="doc_id", how="left")
     late = (F.when(F.col("_ex").isNull(), F.lit("exact_dup"))
             .when(~F.col("_nd_keep"), F.lit("near_dup"))
             .otherwise(F.lit("kept")))

@@ -4,7 +4,7 @@ paths). The training-data-pipeline counterpart of guac's
 dedup-before-ingest maps (/root/reference/pkg/assembler/
 assembler.go:198-314) and visited-set dedup (parser.go:160-188).
 
-All-built-in expressions except nothing — no Python anywhere.
+Built-in Spark SQL expressions only — no Python UDF anywhere.
 """
 
 from __future__ import annotations
@@ -40,21 +40,16 @@ def _word_set(text_col: str) -> F.Column:
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
 
 
-def jaccard_word_pairs(docs: DataFrame, threshold: float = 0.8,
-                       text_col: str = "text") -> DataFrame:
-    """All doc pairs with word-set Jaccard ≥ threshold.
-
-    Shape: explode distinct words → self-join on word → count common
-    words per pair → Jaccard from |A|,|B|,|A∩B|. The self-join is an
-    equi-join on the word (shuffle-partitioned by word); stopword-level
-    hot words would skew at web scale — production path is
-    minhash_lsh_pairs below; this exact variant is the oracle anchor.
-    """
-    words = (docs
-             .select("doc_id", F.explode(_word_set(text_col)).alias("word"),
-                     F.size(_word_set(text_col)).alias("set_size")))
-    a, b = words.alias("a"), words.alias("b")
-    common = (a.join(b, on="word")
+def _set_jaccard_pairs(docs: DataFrame, elems: F.Column,
+                       threshold: float) -> DataFrame:
+    """All doc pairs whose distinct-element sets `elems` have Jaccard
+    ≥ threshold. Shape: explode the elements → self-equi-join on the
+    element (shuffle-partitioned by it) → count common elements per
+    pair → Jaccard from |A|,|B|,|A∩B|."""
+    rows = docs.select("doc_id", F.explode(elems).alias("e"),
+                       F.size(elems).alias("set_size"))
+    a, b = rows.alias("a"), rows.alias("b")
+    common = (a.join(b, on="e")
               .filter(F.col("a.doc_id") < F.col("b.doc_id"))
               .groupBy(F.col("a.doc_id").alias("doc_a"),
                        F.col("b.doc_id").alias("doc_b"),
@@ -66,6 +61,15 @@ def jaccard_word_pairs(docs: DataFrame, threshold: float = 0.8,
     return (common.withColumn("jaccard", F.round(jac, 6))
             .filter(F.col("jaccard") >= threshold)
             .select("doc_a", "doc_b", "jaccard"))
+
+
+def jaccard_word_pairs(docs: DataFrame, threshold: float = 0.8,
+                       text_col: str = "text") -> DataFrame:
+    """All doc pairs with word-set Jaccard ≥ threshold. The word
+    self-join would skew on stopword-level hot words at web scale —
+    the production path is minhash_lsh_pairs below; this exact variant
+    is the oracle anchor."""
+    return _set_jaccard_pairs(docs, _word_set(text_col), threshold)
 
 
 def _ngram_set(text_col: str, n: int) -> F.Column:
@@ -85,27 +89,11 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
                         text_col: str = "text") -> DataFrame:
     """All doc pairs with word-n-gram-shingle Jaccard ≥ threshold —
     the order-sensitive near-dup variant (word sets miss reorderings;
-    shingles catch them). Same explode/equi-join/count shape as
-    `jaccard_word_pairs`: shuffle keys are shingles, which are far
-    less skewed than single hot words — this is the exact-tier anchor
-    for `minhash_lsh_pairs` at scale."""
-    shingles = (docs
-                .select("doc_id",
-                        F.explode(_ngram_set(text_col, n)).alias("sh"),
-                        F.size(_ngram_set(text_col, n)).alias("set_size")))
-    a, b = shingles.alias("a"), shingles.alias("b")
-    common = (a.join(b, on="sh")
-              .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-              .groupBy(F.col("a.doc_id").alias("doc_a"),
-                       F.col("b.doc_id").alias("doc_b"),
-                       F.col("a.set_size").alias("size_a"),
-                       F.col("b.set_size").alias("size_b"))
-              .agg(F.count("*").alias("n_common")))
-    jac = F.col("n_common") / \
-        (F.col("size_a") + F.col("size_b") - F.col("n_common"))
-    return (common.withColumn("jaccard", F.round(jac, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "jaccard"))
+    shingles catch them). Same shape as `jaccard_word_pairs`: shuffle
+    keys are shingles, which are far less skewed than single hot words
+    — this is the exact-tier anchor for `minhash_lsh_pairs` at
+    scale."""
+    return _set_jaccard_pairs(docs, _ngram_set(text_col, n), threshold)
 
 
 def _banding_for(n_hashes: int, threshold: float,
@@ -126,207 +114,186 @@ def _banding_for(n_hashes: int, threshold: float,
     return best
 
 
-def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
-                      n_hashes: int = 32, n_bands: int | None = None,
-                      threshold: float = 0.5,
-                      new_ids: DataFrame | None = None) -> DataFrame:
-    """Near-dup pairs via banded MinHash over word sets, verified with
-    true Jaccard. The 100-TB shape, in order:
+def _word_sets(docs: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, ws, fp1, fp2): each doc's sorted distinct word set and
+    its identity, a 128-bit fingerprint (two independent xxhash64 of
+    the sorted array: grouping carries 2 longs, never the array;
+    collision odds ~n²/2¹²⁸, and the exact verify is unaffected).
+    NULL text is excluded: xxhash64 of a NULL array is the seed
+    constant, so grouping it would fabricate one giant J=1.0 group.
+    Empty and whitespace-only texts stay — they tokenize to [""], and
+    pairing them at J=1.0 is what the exact word-Jaccard oracle does."""
+    return (docs.filter(F.col(text_col).isNotNull())
+            .select("doc_id",
+                    F.array_sort(_word_set(text_col)).alias("ws"))
+            .withColumn("fp1", F.xxhash64("ws"))
+            .withColumn("fp2", F.xxhash64(F.lit(0x9E37), "ws")))
 
-    0. EXACT-DUPLICATE COLLAPSE first: docs are grouped by their
-       (sorted) word set and the whole LSH + verify pipeline runs on
-       ONE representative per distinct set; member pairs are expanded
-       back at the end by two hash joins. Jaccard is a function of
-       the word set alone, so the output is identical — but a k-doc
-       duplicate cluster costs O(k) membership rows instead of
-       O(k²·bands) band-join candidates each paying signature +
-       exact-Jaccard verification (web corpora are full of such
-       clusters: measured at sf0.1, 5000 docs → 3935 distinct sets,
-       8.6M candidate pairs → ~29k rep pairs, 20 s → ~4 s). The
-       quadratic part that remains is the OUTPUT itself, produced by
-       cheap joins. The group identity is a 128-bit fingerprint of
-       the sorted array, never the array itself. Docs whose word set
-       is NULL (NULL text) are excluded up front: xxhash64(NULL array)
-       reduces to the seed constant, so fingerprint-grouping them
-       would fabricate one giant J=1.0 "duplicate" group. (Empty and
-       whitespace-only texts are NOT excluded — they tokenize to the
-       singleton [""], and pairing them at J=1.0 is exactly what the
-       exact word-Jaccard oracle emits for them.)
-    1. band join carries ONLY (doc_id, band keys) — never the word
-       arrays (a pair that collides in k bands would otherwise ship
-       its arrays k times through the shuffle);
-    2. pair dedup while rows are still 2 ints wide;
-    3. signature-estimate prefilter: est-Jaccard = matching minhash
-       fraction, keep est ≥ threshold − 3σ where σ = sqrt(t(1−t)/n)
-       (≈0.27 at n=32, t=0.5 — boundary-pair recall loss <0.5%),
-       discarding the heavy mid-similarity candidate mass cheaply;
-    4. exact word-set Jaccard on the survivors only.
 
-    Each word is hashed ONCE (`hs`); the n_hashes permutations derive
-    from the 8-byte long via xxhash64(h, j) — n× fewer string hashes
-    than hashing every word per permutation (standard MinHash
-    practice; ANSI-safe vs wrap-around affine mixing).
+def _group_table(wsd: DataFrame, n_hashes: int,
+                 state: DataFrame | None = None) -> DataFrame:
+    """The MinHash-LSH group table: one row per distinct word set —
+    (fp1, fp2, rep_id, ws, sig, old, new); `rep_id` is the set's min
+    doc_id, `old`/`new` its sorted member doc_ids in the store and in
+    the batch `wsd`. ONE aggregation of the batch over the
+    fingerprint; each set signed once. Without `state` every member is
+    new. With it, the stored groups (one aggregation of the state
+    rows) join on the fingerprint and keep their stored `sig` and
+    `ws`: only unseen sets are signed, and old TEXT is never read."""
+    groups = wsd.groupBy("fp1", "fp2").agg(
+        F.min("doc_id").alias("rep_id"),
+        F.expr("min_by(ws, doc_id)").alias("ws"),
+        F.array_sort(F.collect_list("doc_id")).alias("new"))
+    no_ids = F.array().cast(groups.schema["new"].dataType)
+    if state is None:
+        return groups.select("fp1", "fp2", "rep_id", "ws",
+                             _sig_col(n_hashes).alias("sig"),
+                             no_ids.alias("old"), "new")
+    stored = state.groupBy("fp1", "fp2").agg(
+        F.min("doc_id").alias("rep_old"),
+        F.first("sig", ignorenulls=True).alias("sig"),
+        F.first("ws", ignorenulls=True).alias("ws_old"),
+        F.array_sort(F.collect_list("doc_id")).alias("old"))
+    return (groups.join(stored, on=["fp1", "fp2"], how="full")
+            .select("fp1", "fp2",
+                    F.least("rep_id", "rep_old").alias("rep_id"),
+                    F.coalesce("ws_old", "ws").alias("ws"),
+                    # coalesce short-circuits: stored sets are not signed
+                    F.coalesce("sig", _sig_col(n_hashes)).alias("sig"),
+                    F.coalesce("old", no_ids).alias("old"),
+                    F.coalesce("new", no_ids).alias("new")))
 
-    `new_ids` (optional, one id column) is INCREMENTAL mode — the
-    production shape where a fresh ingest batch dedups against the
-    existing corpus: `docs` is the full corpus (old ∪ new) and the
-    output is restricted to pairs touching at least one new doc —
-    exactly `minhash_lsh_pairs(docs)` filtered to new-touching pairs
-    (same hash seeds ⇒ same candidates), but candidate pairs whose
-    duplicate groups contain no new member are dropped BEFORE the
-    signature prefilter and exact-verify tiers, so the expensive work
-    is proportional to the batch, not the corpus. (Old-old pairs are
-    already known from previous runs. This mode still recomputes the
-    old side's signatures; the PERSISTED variant that reads them from
-    a stored table instead is minhash_lsh_pairs_stored below, fed by
-    write_minhash_state at ingest.)
 
-    `n_bands=None` (default) tunes the banding to the threshold via
-    `_banding_for` — longer bands at higher thresholds keep the
-    band-join candidate mass proportional to the TRUE pair count
-    instead of admitting every mid-similarity pair."""
+def _lsh_core(groups: DataFrame, n_hashes: int, n_bands: int | None,
+              threshold: float) -> DataFrame:
+    """Near-dup member pairs (doc_a < doc_b, jaccard) of a materialized
+    group table, restricted to pairs touching a `new` member:
+
+    1. band self-join on ONLY (rep_id, band keys) — never the word
+       arrays, which a pair colliding in k bands would ship k times —
+       probing from the groups with a new member, so old-old
+       candidates never form; candidates dedup while 2 ints wide;
+    2. signature prefilter ahead of the word-set join (failing
+       candidates never carry word arrays): keep est-Jaccard ≥
+       threshold − 3σ, σ = sqrt(t(1−t)/n) (≈0.27 at n=32, t=0.5 —
+       boundary-pair recall loss <0.5%);
+    3. exact word-set Jaccard on the survivors;
+    4. member expansion from the member arrays, no member self-join:
+       within a group every pair is J=1.0; across a verified group
+       pair every member pair shares the groups' Jaccard. A new member
+       pairs with every member of the other side, an old one only
+       with its new ones."""
     if n_bands is None:
         rows_per_band, n_bands = _banding_for(n_hashes, threshold)
     else:
         rows_per_band = n_hashes // n_bands
-    # the set identity is a 128-bit fingerprint (two independent
-    # xxhash64 of the sorted array), NOT the array itself: grouping and
-    # the membership join carry 2 longs per row instead of the word
-    # array, and the rep-selection agg is a hash agg on fixed-width
-    # keys (collision odds ~n²/2¹²⁸ — the standard content-address
-    # assumption; the exact-Jaccard verify in step 4 is unaffected).
-    # Deliberately NOT persisted although three branches reuse it:
-    # measured at sf0.1/local[32], caching wsd (or base below) is
-    # 25-35% SLOWER than recomputing — the columnar cache must
-    # materialize the word arrays, which breaks whole-stage codegen
-    # and costs more than re-running tokenize+sort+hash per branch
-    wsd = (docs.select("doc_id",
-                       F.array_sort(_word_set(text_col)).alias("ws"))
-           .filter(F.col("ws").isNotNull())
-           .withColumn("fp1", F.xxhash64("ws"))
-           .withColumn("fp2", F.xxhash64(F.lit(0x9E37), "ws")))
-    rep_ids = wsd.groupBy("fp1", "fp2").agg(
-        F.min("doc_id").alias("rep_id"))
-    members = (wsd.select("doc_id", "fp1", "fp2")
-               .join(rep_ids, on=["fp1", "fp2"])
-               .select("rep_id", "doc_id"))
-    if new_ids is not None:
-        nid = (new_ids.select(F.col(new_ids.columns[0]).alias("_nid"))
-               .distinct())
-        members = (members
-                   .join(nid, members["doc_id"] == nid["_nid"], "left")
-                   .withColumn("is_new", F.col("_nid").isNotNull())
-                   .drop("_nid"))
-        # duplicate groups containing >= 1 new member; candidate pairs
-        # where NEITHER side's group has one can produce no new-
-        # touching output pair, so they die before prefilter/verify
-        rep_new = (members.filter("is_new")
-                   .select("rep_id").distinct())
-    reps = (wsd.join(rep_ids.select(F.col("rep_id").alias("doc_id")),
-                     on="doc_id")
-            .select("doc_id", "ws"))
-    base = (reps
-            .withColumn("hs", _hs_col())
-            .withColumn("sig", _sig_col(n_hashes))
-            .drop("hs"))
-    bands = _band_col(n_hashes, rows_per_band, n_bands)
-    banded = base.withColumn("band", F.explode(bands)).select(
-        "doc_id",
-        F.col("band.band_id").alias("band_id"),
-        F.col("band.band_hash").alias("band_hash"))
-    a, b = banded.alias("a"), banded.alias("b")
+    banded = (groups
+              .select("rep_id", (F.size("new") > 0).alias("has_new"),
+                      F.explode(_band_col(n_hashes, rows_per_band,
+                                          n_bands)).alias("band"))
+              .select("rep_id", "has_new", "band.band_id",
+                      "band.band_hash"))
+    a, b = banded.filter("has_new").alias("a"), banded.alias("b")
+    # two new-touching groups meet in both orientations: keep one
     cand = (a.join(b, on=["band_id", "band_hash"])
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"]))
-    if new_ids is not None:
-        cand = (cand
-                .join(rep_new.select(F.col("rep_id").alias("doc_a"),
-                                     F.lit(True).alias("_na")),
-                      on="doc_a", how="left")
-                .join(rep_new.select(F.col("rep_id").alias("doc_b"),
-                                     F.lit(True).alias("_nb")),
-                      on="doc_b", how="left")
-                .filter(F.col("_na").isNotNull() | F.col("_nb").isNotNull())
-                .select("doc_a", "doc_b"))
-    sigs = base.select("doc_id", "sig")
+            .filter((F.col("a.rep_id") < F.col("b.rep_id"))
+                    | ~F.col("b.has_new"))
+            .select(F.col("a.rep_id").alias("rep_a"),
+                    F.col("b.rep_id").alias("rep_b"))
+            .dropDuplicates(["rep_a", "rep_b"]))
+
+    def side(s: str, *cols: str) -> DataFrame:
+        return groups.select(F.col("rep_id").alias(f"rep_{s}"),
+                             *[F.col(c).alias(f"{c}_{s}") for c in cols])
+
     est = F.expr(
         f"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
         f" / cast({n_hashes} as double)")
     # 3σ margin for an n_hashes Bernoulli estimate at J = threshold
     margin = 3.0 * (threshold * (1.0 - threshold) / n_hashes) ** 0.5
-    prefiltered = (cand
-                   .join(sigs.select(F.col("doc_id").alias("doc_a"),
-                                     F.col("sig").alias("sig_a")), on="doc_a")
-                   .join(sigs.select(F.col("doc_id").alias("doc_b"),
-                                     F.col("sig").alias("sig_b")), on="doc_b")
-                   .filter(est >= threshold - margin)
-                   .select("doc_a", "doc_b"))
-    ws = base.select("doc_id", "ws")
-    verified = (prefiltered
-                .join(ws.select(F.col("doc_id").alias("doc_a"),
-                                F.col("ws").alias("ws_a")), on="doc_a")
-                .join(ws.select(F.col("doc_id").alias("doc_b"),
-                                F.col("ws").alias("ws_b")), on="doc_b"))
     jac = F.size(F.array_intersect("ws_a", "ws_b")) / \
         F.size(F.array_union("ws_a", "ws_b"))
-    rep_pairs = (verified.withColumn("jaccard", F.round(jac, 6))
-                 .filter(F.col("jaccard") >= threshold)
-                 .select("doc_a", "doc_b", "jaccard"))
-    # expand back to member pairs: within a duplicate group every pair
-    # is J=1.0 by construction; across groups every member pair shares
-    # its rep pair's exact Jaccard (identical word sets)
-    ma, mb = members.alias("ma"), members.alias("mb")
-    within = (ma.join(mb, on="rep_id")
-              .filter(F.col("ma.doc_id") < F.col("mb.doc_id")))
-    if new_ids is not None:
-        within = within.filter(F.col("ma.is_new") | F.col("mb.is_new"))
-    within = within.select(F.col("ma.doc_id").alias("doc_a"),
-                           F.col("mb.doc_id").alias("doc_b"),
-                           F.lit(1.0).alias("jaccard"))
-    mem_a_cols = [F.col("rep_id").alias("doc_a"),
-                  F.col("doc_id").alias("mem_a")]
-    mem_b_cols = [F.col("rep_id").alias("doc_b"),
-                  F.col("doc_id").alias("mem_b")]
-    if new_ids is not None:
-        mem_a_cols.append(F.col("is_new").alias("_new_a"))
-        mem_b_cols.append(F.col("is_new").alias("_new_b"))
-    cross = (rep_pairs
-             .join(members.select(*mem_a_cols), on="doc_a")
-             .join(members.select(*mem_b_cols), on="doc_b"))
-    if new_ids is not None:
-        # member-level exactness: a new-group candidate still expands
-        # to some old-old member pairs — keep only new-touching ones
-        cross = cross.filter(F.col("_new_a") | F.col("_new_b"))
-    cross = cross.select(F.least("mem_a", "mem_b").alias("doc_a"),
-                         F.greatest("mem_a", "mem_b").alias("doc_b"),
-                         "jaccard")
-    return within.unionByName(cross)
+    verified = (cand
+                .join(side("a", "sig"), on="rep_a")
+                .join(side("b", "sig"), on="rep_b")
+                .filter(est >= threshold - margin)
+                .select("rep_a", "rep_b")
+                .join(side("a", "ws", "old", "new"), on="rep_a")
+                .join(side("b", "ws", "old", "new"), on="rep_b")
+                .withColumn("jaccard", F.round(jac, 6))
+                .filter(F.col("jaccard") >= threshold))
+    cross = (verified
+             .select("jaccard", "new_a", "new_b", "old_b",
+                     F.posexplode(F.concat("new_a", "old_a"))
+                     .alias("i", "m_a"))
+             .select("m_a", F.explode(
+                         F.when(F.col("i") < F.size("new_a"),
+                                F.concat("new_b", "old_b"))
+                         .otherwise(F.col("new_b"))).alias("m_b"),
+                     "jaccard"))
+    within = (groups
+              .select("new", "old",
+                      F.posexplode("new").alias("i", "m_a"))
+              .select("m_a", F.explode(F.concat(
+                          F.expr("slice(new, i + 2, size(new))"),
+                          "old")).alias("m_b"),
+                      F.lit(1.0).alias("jaccard")))
+    return (within.unionByName(cross)
+            .select(F.least("m_a", "m_b").alias("doc_a"),
+                    F.greatest("m_a", "m_b").alias("doc_b"), "jaccard"))
 
 
-def _hs_col() -> F.Column:
-    """Word-hash array of the `ws` column: each word hashed ONCE;
-    the n permutations derive from the 8-byte long (standard MinHash
-    practice — n× fewer string hashes)."""
-    return F.expr("transform(ws, w -> xxhash64(w))")
+def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
+                      n_hashes: int = 32, n_bands: int | None = None,
+                      threshold: float = 0.5) -> DataFrame:
+    """Near-dup pairs (doc_a < doc_b, jaccard) via banded MinHash over
+    word sets, verified with true Jaccard (precision 1.0 vs
+    `jaccard_word_pairs`).
+
+    Shape: docs are tokenized once and collapsed by ONE aggregation
+    into the group table (`_group_table`: one row per distinct word
+    set, signed once, with its sorted member doc_ids), materialized
+    once by an eager localCheckpoint; every tier of `_lsh_core` reads
+    it. Jaccard is a function of the word set alone, so the output is
+    identical to per-doc LSH — but a k-doc duplicate cluster costs one
+    signature and k member ids instead of O(k²·bands) band-join
+    candidates (measured at sf0.1: 5000 docs → 3935 distinct sets).
+    What stays quadratic is the OUTPUT, generated from member arrays.
+
+    Materializing the table is the faster side on a 4-vCPU host
+    (local[4], corpus_clean benchmark, 10 alternating pairs: median
+    8.7 → 12.7 docs/s, 72 → 23 Spark jobs per op; BENCH/NOTES.md):
+    the unmaterialized plan re-ran the word-set tokenization in every
+    join branch (tests/test_plans.py::test_minhash_tokenizes_once
+    pins one).
+
+    `n_bands=None` (default) tunes the banding to the threshold via
+    `_banding_for` — longer bands at higher thresholds keep the
+    band-join candidate mass proportional to the TRUE pair count."""
+    groups = _group_table(_word_sets(docs, text_col), n_hashes) \
+        .localCheckpoint()
+    return _lsh_core(groups, n_hashes, n_bands, threshold)
 
 
 def _sig_col(n_hashes: int) -> F.Column:
-    """MinHash signature from the precomputed `hs` word-hash column —
-    THE single signature derivation (minhash_lsh_pairs, the state
-    writer, and the stored-incremental path all call this), so stored
-    and fresh signatures can never drift apart."""
+    """MinHash signature of the `ws` column — THE single signature
+    derivation, so stored and fresh signatures never drift apart. Each
+    word is string-hashed ONCE; the n permutations derive from its
+    8-byte hash via xxhash64(h, j) (ANSI-safe vs affine mixing). The
+    hashes are bound as lambda variable `hs` of a one-element
+    transform: as a separate projection CollapseProject inlines them
+    into the per-permutation lambda, re-hashing every word n times."""
     return F.expr(
-        f"transform(sequence(0, {n_hashes - 1}), "
-        f"j -> array_min(transform(hs, h -> xxhash64(h, j))))")
+        f"transform(array(transform(ws, w -> xxhash64(w))), "
+        f"hs -> transform(sequence(0, {n_hashes - 1}), "
+        f"j -> array_min(transform(hs, h -> xxhash64(h, j)))))[0]")
 
 
 def _band_col(n_hashes: int, rows_per_band: int,
               n_bands: int) -> F.Column:
-    """Banded slice hashes of a `sig` column (shared by fresh and
-    stored paths — bands are a cheap pure function of the signature,
-    so the state table stores only `sig`)."""
+    """Banded slice hashes of a `sig` column (bands are a cheap pure
+    function of the signature, so the state table stores only
+    `sig`)."""
     return F.array(*[
         F.struct(F.lit(b).alias("band_id"),
                  F.xxhash64(*[F.expr(f"sig[{b * rows_per_band + r}]")
@@ -335,46 +302,34 @@ def _band_col(n_hashes: int, rows_per_band: int,
         for b in range(n_bands)])
 
 
-def minhash_state(docs: DataFrame, text_col: str = "text",
-                  n_hashes: int = 32) -> DataFrame:
-    """The PERSISTED near-dup corpus state — (doc_id, fp1, fp2, sig,
-    ws), one row per doc; `sig`/`ws` non-null only on each exact-dup
-    group's representative (min doc_id), so the store carries ONE
-    signature + word set per distinct word set, not per doc. Written
-    into the workdir at ingest (write_minhash_state) and read back by
-    minhash_lsh_pairs_stored, which then computes signatures for the
-    NEW batch only — the stored-signature seam minhash_lsh_pairs'
-    docstring names. n_hashes must match between writer and reader
-    (the signature length is the contract)."""
-    wsd = (docs.select("doc_id",
-                       F.array_sort(_word_set(text_col)).alias("ws"))
-           .filter(F.col("ws").isNotNull())
-           .withColumn("fp1", F.xxhash64("ws"))
-           .withColumn("fp2", F.xxhash64(F.lit(0x9E37), "ws")))
-    # sig computed on the rep rows only (the O(distinct) heavy tier)
-    reps = (wsd.groupBy("fp1", "fp2")
-            .agg(F.min("doc_id").alias("rep_id"),
-                 F.expr("min_by(ws, doc_id)").alias("ws"))
-            .withColumn("hs", _hs_col())
-            .withColumn("sig", _sig_col(n_hashes))
-            .select("fp1", "fp2", "rep_id", "sig", "ws"))
-    return (wsd.select("doc_id", "fp1", "fp2")
-            .join(reps, on=["fp1", "fp2"], how="left")
+def _state_rows(groups: DataFrame) -> DataFrame:
+    """State rows (doc_id, fp1, fp2, sig, ws) of a group table's `new`
+    members; `sig`/`ws` only on the rep (min doc_id) of a set the
+    store has not seen."""
+    rep = (F.col("i") == 0) & (F.size("old") == 0)
+    return (groups
+            .select("fp1", "fp2", "sig", "ws", "old",
+                    F.posexplode("new").alias("i", "doc_id"))
             .select("doc_id", "fp1", "fp2",
-                    F.when(F.col("doc_id") == F.col("rep_id"),
-                           F.col("sig")).alias("sig"),
-                    F.when(F.col("doc_id") == F.col("rep_id"),
-                           F.col("ws")).alias("ws")))
+                    F.when(rep, F.col("sig")).alias("sig"),
+                    F.when(rep, F.col("ws")).alias("ws")))
 
 
 def write_minhash_state(docs: DataFrame, path: str,
                         text_col: str = "text",
                         n_hashes: int = 32) -> None:
-    """Materialize the near-dup state table at ingest (parquet,
-    append): batch 1 writes the corpus state, every later batch
-    appends the delta minhash_lsh_pairs_stored returns."""
-    minhash_state(docs, text_col, n_hashes).write.mode(
-        "append").parquet(path)
+    """Write the PERSISTED near-dup corpus state at ingest — (doc_id,
+    fp1, fp2, sig, ws), one row per doc; `sig`/`ws` non-null only on
+    each exact-dup group's representative (min doc_id), so the store
+    carries ONE signature + word set per distinct word set. Batch 1
+    writes the corpus state; every later batch appends the delta
+    minhash_lsh_pairs_stored returns. Both go through io.append_table,
+    so a failed or killed write never leaves part of a batch in the
+    store. n_hashes must match between writer and reader (the
+    signature length is the contract)."""
+    from guackg.io import append_table
+    append_table(_state_rows(_group_table(_word_sets(docs, text_col),
+                                          n_hashes)), path)
 
 
 def minhash_lsh_pairs_stored(new_docs: DataFrame, state: DataFrame,
@@ -384,128 +339,22 @@ def minhash_lsh_pairs_stored(new_docs: DataFrame, state: DataFrame,
                              threshold: float = 0.5
                              ) -> tuple[DataFrame, DataFrame]:
     """Incremental MinHash-LSH against a PERSISTED corpus: exactly
-    `minhash_lsh_pairs(old ∪ new, new_ids=new)` (same seeds, same
-    banding, same 3σ prefilter, same exact-Jaccard verify) — but the
-    old side comes entirely from the stored state, so the batch never
-    touches old TEXT and the expensive tiers (tokenize, word-hash,
-    signature) run on the NEW docs only:
-
-    - new docs' word sets/fingerprints: O(batch) heavy work;
-    - signatures: computed ONLY for word sets the store has never
-      seen (anti-join on the group fingerprint);
-    - banding of stored groups: a narrow scan of stored `sig` longs
-      (16 xxhash64 per group — the unavoidable O(store) probe, no
-      shuffle of the store: the band join's other side is the new
-      batch);
-    - candidate pruning, prefilter, verify: new-touching pairs only.
+    `minhash_lsh_pairs(old ∪ new)` restricted to pairs touching a new
+    doc — the same `_lsh_core` over a group table that joins the
+    batch's groups to the stored ones — but the batch never reads old
+    TEXT, and only word sets the store has never seen are signed.
 
     Returns (pairs, delta_state). `pairs` is the new-touching pair
     set; `delta_state` is the new docs' state rows (sig/ws on new
-    groups' reps only) — append it to the store
-    (write_minhash_state's layout) to make the NEXT batch
+    sets' reps only) — append it to the store to make the NEXT batch
     incremental too. Assumes batch doc_ids are disjoint from stored
     ones (the ingest invariant). Exactness vs the one-shot op is
     pinned by tests/test_ops.py::
     test_minhash_stored_state_equals_full_restricted."""
-    if n_bands is None:
-        rows_per_band, n_bands = _banding_for(n_hashes, threshold)
-    else:
-        rows_per_band = n_hashes // n_bands
-    new_wsd = (new_docs
-               .select("doc_id",
-                       F.array_sort(_word_set(text_col)).alias("ws"))
-               .filter(F.col("ws").isNotNull())
-               .withColumn("fp1", F.xxhash64("ws"))
-               .withColumn("fp2", F.xxhash64(F.lit(0x9E37), "ws"))
-               .localCheckpoint())
-    old_members = state.select("doc_id", "fp1", "fp2")
-    old_sigs = (state.filter(F.col("sig").isNotNull())
-                .select("fp1", "fp2", "sig", "ws"))
-    # groups born in this batch: never seen by the store → the ONLY
-    # signature computation of the run
-    new_group_reps = (new_wsd.groupBy("fp1", "fp2")
-                      .agg(F.min("doc_id").alias("rep_id"),
-                           F.expr("min_by(ws, doc_id)").alias("ws"))
-                      .join(old_sigs.select("fp1", "fp2"),
-                            on=["fp1", "fp2"], how="left_anti")
-                      .withColumn("hs", _hs_col())
-                      .withColumn("sig", _sig_col(n_hashes))
-                      .drop("hs"))
-    group_sigs = old_sigs.unionByName(
-        new_group_reps.select("fp1", "fp2", "sig", "ws"))
-    banded = (group_sigs
-              .withColumn("band",
-                          F.explode(_band_col(n_hashes, rows_per_band,
-                                              n_bands)))
-              .select(F.struct("fp1", "fp2").alias("g"),
-                      F.col("band.band_id").alias("band_id"),
-                      F.col("band.band_hash").alias("band_hash")))
-    g_new = (new_wsd.select(F.struct("fp1", "fp2").alias("g"))
-             .distinct())
-    # one join side is new-group bands only — old-old pairs can never
-    # form; both-new pairs arrive twice and canonicalize away
-    a = banded.join(g_new, on="g").alias("a")
-    b = banded.alias("b")
-    cand = (a.join(b, on=["band_id", "band_hash"])
-            .filter(F.col("a.g") != F.col("b.g"))
-            .select(F.least(F.col("a.g"), F.col("b.g")).alias("g1"),
-                    F.greatest(F.col("a.g"), F.col("b.g")).alias("g2"))
-            .dropDuplicates(["g1", "g2"]))
-    gs = group_sigs.select(F.struct("fp1", "fp2").alias("g"),
-                           "sig", "ws")
-    est = F.expr(
-        f"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
-        f" / cast({n_hashes} as double)")
-    margin = 3.0 * (threshold * (1.0 - threshold) / n_hashes) ** 0.5
-    jac = F.size(F.array_intersect("ws_a", "ws_b")) / \
-        F.size(F.array_union("ws_a", "ws_b"))
-    gpairs = (cand
-              .join(gs.select(F.col("g").alias("g1"),
-                              F.col("sig").alias("sig_a"),
-                              F.col("ws").alias("ws_a")), on="g1")
-              .join(gs.select(F.col("g").alias("g2"),
-                              F.col("sig").alias("sig_b"),
-                              F.col("ws").alias("ws_b")), on="g2")
-              .filter(est >= threshold - margin)
-              .withColumn("jaccard", F.round(jac, 6))
-              .filter(F.col("jaccard") >= threshold)
-              .select("g1", "g2", "jaccard"))
-    members = (old_members.withColumn("is_new", F.lit(False))
-               .unionByName(new_wsd.select("doc_id", "fp1", "fp2")
-                            .withColumn("is_new", F.lit(True)))
-               .select(F.struct("fp1", "fp2").alias("g"),
-                       "doc_id", "is_new"))
-    ma, mb = members.alias("ma"), members.alias("mb")
-    within = (ma.join(mb, on="g")
-              .filter((F.col("ma.doc_id") < F.col("mb.doc_id"))
-                      & (F.col("ma.is_new") | F.col("mb.is_new")))
-              .select(F.col("ma.doc_id").alias("doc_a"),
-                      F.col("mb.doc_id").alias("doc_b"),
-                      F.lit(1.0).alias("jaccard")))
-    cross = (gpairs
-             .join(members.select(F.col("g").alias("g1"),
-                                  F.col("doc_id").alias("mem_a"),
-                                  F.col("is_new").alias("_new_a")),
-                   on="g1")
-             .join(members.select(F.col("g").alias("g2"),
-                                  F.col("doc_id").alias("mem_b"),
-                                  F.col("is_new").alias("_new_b")),
-                   on="g2")
-             .filter(F.col("_new_a") | F.col("_new_b"))
-             .select(F.least("mem_a", "mem_b").alias("doc_a"),
-                     F.greatest("mem_a", "mem_b").alias("doc_b"),
-                     "jaccard"))
-    pairs = within.unionByName(cross)
-    delta = (new_wsd.select("doc_id", "fp1", "fp2")
-             .join(new_group_reps.select("fp1", "fp2", "rep_id",
-                                         "sig", "ws"),
-                   on=["fp1", "fp2"], how="left")
-             .select("doc_id", "fp1", "fp2",
-                     F.when(F.col("doc_id") == F.col("rep_id"),
-                            F.col("sig")).alias("sig"),
-                     F.when(F.col("doc_id") == F.col("rep_id"),
-                            F.col("ws")).alias("ws")))
-    return pairs, delta
+    groups = _group_table(_word_sets(new_docs, text_col), n_hashes,
+                          state).localCheckpoint()
+    return (_lsh_core(groups, n_hashes, n_bands, threshold),
+            _state_rows(groups))
 
 
 def winnow_near_pairs(docs: DataFrame, text_col: str = "text",

@@ -113,8 +113,9 @@ def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.95,
     O(n²) cross product. Recall rises with n_tables; every surviving
     pair is exact-verified, so precision is 1.0 vs the exact op.
 
-    The band self-join carries IDS ONLY (the minhash_lsh_pairs shape):
-    a true near-dup collides in most tables, so rows shipping vectors
+    The band self-join carries IDS ONLY (as minhash_lsh_pairs' band
+    join carries only group rep ids, dedup._lsh_core): a true
+    near-dup collides in most tables, so rows shipping vectors
     through the join would pay the O(dim) payload — and the cosine —
     up to n_tables times per pair; instead pairs dedup while 2 ints
     wide, then the vectors join back once. NULL embeddings are

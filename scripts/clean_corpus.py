@@ -76,12 +76,13 @@ def run_clean(spark, args) -> dict:
     if state_dir:
         from pyspark.sql import functions as F
 
+        from guackg.io import append_table, read_table, table_exists
         from guackg.ops.dedup import (minhash_lsh_pairs_stored,
                                       write_minhash_state)
         kept_docs = docs.join(audit.filter("keep").select("doc_id"),
                               on="doc_id")
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
+        if table_exists(state_dir):
+            state = read_table(spark, state_dir)
             pairs, delta = minhash_lsh_pairs_stored(
                 kept_docs, state, text_col=args.text_col,
                 threshold=args.near_threshold)
@@ -105,9 +106,8 @@ def run_clean(spark, args) -> dict:
                                         F.lit("near_dup_corpus"))
                                  .otherwise(F.col("stage")))
                      .drop("_cross").localCheckpoint())
-            delta.join(audit.filter("keep").select("doc_id"),
-                       on="doc_id") \
-                .write.mode("append").parquet(state_dir)
+            append_table(delta.join(audit.filter("keep").select("doc_id"),
+                                    on="doc_id"), state_dir)
         else:
             write_minhash_state(kept_docs, state_dir,
                                 text_col=args.text_col)

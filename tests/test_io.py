@@ -698,3 +698,52 @@ def test_merge_rejects_hive_escaped_partition_values(spark, base):
         gio.merge_upsert(spark, boolv, table, keys=["k", "pred"],
                          partition_by=["pred", "bucket"])
     assert _snapshot(table) == before, "failed merge mutated the table"
+
+
+def test_append_table_failed_or_killed_append_reads_whole_batches(
+        spark, tmp_path, monkeypatch):
+    """A failed append job leaves the table as it was (under the v2
+    committer a bare mode("append") leaves its committed tasks' files
+    in the table, and the next batch reads them as stored rows); a
+    writer killed while publishing a written batch is rolled forward
+    whole by the next read. A reader never sees part of a batch."""
+    import glob
+
+    path = str(tmp_path / "state")
+
+    def ids():
+        return sorted(r.id for r in gio.read_table(spark, path).collect())
+
+    gio.append_table(spark.range(0, 5, 1, 1), path)
+    before = ids()
+    # 8 one-row tasks on local[4]: the failing task 7 starts only after
+    # earlier tasks committed their files
+    bad = spark.range(0, 8, 1, 8).select(
+        F.when(F.col("id") == 7, F.raise_error(F.lit("injected")))
+        .otherwise(F.col("id") + 100).alias("id"))
+    with pytest.raises(Exception, match="injected"):
+        gio.append_table(bad, path)
+    assert ids() == before
+
+    class Killed(Exception):
+        pass
+
+    real_replace = os.replace
+    moved = []
+
+    def dying_replace(src, dst):
+        if ".__append__" in src and moved:
+            raise Killed()
+        real_replace(src, dst)
+        moved.append(src)
+
+    monkeypatch.setattr(gio.os, "replace", dying_replace)
+    with pytest.raises(Killed):
+        gio.append_table(spark.range(200, 204, 1, 4), path)
+    monkeypatch.undo()
+    assert glob.glob(path + ".__append__*")
+    assert ids() == before + [200, 201, 202, 203]
+    assert not glob.glob(path + ".__append__*")
+    gio.append_table(spark.range(300, 302, 1, 2), path)
+    assert ids() == before + [200, 201, 202, 203, 300, 301]
+    assert not glob.glob(path + ".__tmp__*")

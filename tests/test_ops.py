@@ -256,21 +256,32 @@ def test_minhash_ignores_null_and_empty_texts(spark):
     assert not any(d in (1, 2) for pair in got for d in pair[:2])
 
 
-def test_minhash_incremental_equals_full_restricted(docs):
-    """Incremental mode (new batch vs existing corpus) must equal the
-    full run restricted to pairs touching a new doc — same hash seeds,
-    same candidates, only the old-old work is skipped."""
-    from guackg.ops.dedup import minhash_lsh_pairs
+def _new_touching(pairs, new_ids):
+    return {(r.doc_a, r.doc_b, r.jaccard) for r in pairs.collect()
+            if r.doc_a in new_ids or r.doc_b in new_ids}
 
-    new = docs.filter("doc_id % 5 = 0").select("doc_id")
-    new_set = {r.doc_id for r in new.collect()}
+
+def test_minhash_incremental_equals_full_restricted(docs, tmp_path):
+    """Incremental dedup (new batch vs existing corpus) must equal the
+    one-shot run over old ∪ new restricted to pairs touching a new
+    doc — same hash seeds, same candidates, only the old-old work is
+    skipped."""
+    from guackg.ops.dedup import (minhash_lsh_pairs,
+                                  minhash_lsh_pairs_stored,
+                                  write_minhash_state)
+
+    spark = docs.sparkSession
+    new = docs.filter("doc_id % 5 = 0")
+    new_set = {r.doc_id for r in new.select("doc_id").collect()}
+    path = str(tmp_path / "minhash_state")
+    write_minhash_state(docs.filter("doc_id % 5 <> 0"), path)
 
     full = {(r.doc_a, r.doc_b, r.jaccard)
             for r in minhash_lsh_pairs(docs, threshold=0.5).collect()}
     want = {p for p in full if p[0] in new_set or p[1] in new_set}
-    got = {(r.doc_a, r.doc_b, r.jaccard)
-           for r in minhash_lsh_pairs(docs, threshold=0.5,
-                                      new_ids=new).collect()}
+    pairs, _ = minhash_lsh_pairs_stored(new, spark.read.parquet(path),
+                                        threshold=0.5)
+    got = {(r.doc_a, r.doc_b, r.jaccard) for r in pairs.collect()}
     assert got == want
     assert len(want) > 0 and len(want) < len(full)
 
@@ -370,6 +381,7 @@ def test_minhash_stored_state_equals_full_restricted(docs, tmp_path):
     exactly the one-shot run restricted to new-touching pairs. The
     returned delta appends cleanly: a third batch against
     state ∪ delta is exact too."""
+    from guackg.io import append_table
     from guackg.ops.dedup import (minhash_lsh_pairs,
                                   minhash_lsh_pairs_stored,
                                   write_minhash_state)
@@ -384,14 +396,13 @@ def test_minhash_stored_state_equals_full_restricted(docs, tmp_path):
     pairs, delta = minhash_lsh_pairs_stored(new, state, threshold=0.5)
     got = {(r.doc_a, r.doc_b, r.jaccard) for r in pairs.collect()}
     corpus2 = old.unionByName(new)
-    want = {(r.doc_a, r.doc_b, r.jaccard)
-            for r in minhash_lsh_pairs(corpus2, threshold=0.5,
-                                       new_ids=new.select("doc_id"))
-            .collect()}
+    new_ids = {r.doc_id for r in new.select("doc_id").collect()}
+    want = _new_touching(minhash_lsh_pairs(corpus2, threshold=0.5),
+                         new_ids)
     assert got == want and len(want) > 0
 
     # append the delta (the ingest shape) and run a third batch
-    delta.write.mode("append").parquet(path)
+    append_table(delta, path)
     state2 = spark.read.parquet(path)
     assert state2.count() == corpus2.count()
     # exactly one stored signature per distinct word set
@@ -399,8 +410,7 @@ def test_minhash_stored_state_equals_full_restricted(docs, tmp_path):
         state2.select("fp1", "fp2").distinct().count()
     pairs3, _ = minhash_lsh_pairs_stored(new3, state2, threshold=0.5)
     got3 = {(r.doc_a, r.doc_b, r.jaccard) for r in pairs3.collect()}
-    want3 = {(r.doc_a, r.doc_b, r.jaccard)
-             for r in minhash_lsh_pairs(docs, threshold=0.5,
-                                        new_ids=new3.select("doc_id"))
-             .collect()}
+    new3_ids = {r.doc_id for r in new3.select("doc_id").collect()}
+    want3 = _new_touching(minhash_lsh_pairs(docs, threshold=0.5),
+                          new3_ids)
     assert got3 == want3 and len(want3) > 0

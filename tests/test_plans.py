@@ -82,3 +82,29 @@ def test_wholestage_codegen_on_textstats(spark):
     # '*(n)' prefixes mark WholeStageCodegen stages in plan.toString()
     assert "*(1)" in plan
     assert "EvalPython" not in plan  # zero Python of any kind
+
+
+def test_minhash_tokenizes_once(spark, monkeypatch):
+    """minhash_lsh_pairs evaluates the word-set tokenization in ONE
+    place across the jobs it runs (the frames it materializes plus the
+    returned frame): recomputing it per join branch re-scans and
+    re-tokenizes the input once per branch."""
+    from guackg.ops.dedup import minhash_lsh_pairs
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"),
+         (3, "alpha beta gamma epsilon"), (4, None), (5, "zeta eta")],
+        "doc_id long, text string")
+    plans = []
+    frame_cls = type(docs)
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    pairs = minhash_lsh_pairs(docs, threshold=0.5)
+    plans.append(_plan(pairs))
+    assert sum(p.count("split(lower(trim(") for p in plans) == 1
+    assert {(r.doc_a, r.doc_b) for r in pairs.collect()} == \
+        {(1, 2), (1, 3), (2, 3)}
